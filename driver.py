@@ -5,9 +5,12 @@ argument surface, S5 in SURVEY.md §2.1, re-expressed).
         --algo pagerank --source /path/to/source_table.parquet \
         --checkpoint-root /data/ckpt --run-id run1 --output /data/out
 
-``--source`` is a parquet/Iceberg path of the source-code table
-(repo, path, commit, lang, content); edges are derived via the Arrow-UDF
-extractor. ``--edges`` skips extraction and reads an edge table directly.
+``--source`` is the source-code table (repo, path, commit, lang, content)
+as an Iceberg table name (``cat.db.repos``) or a parquet path; edges are
+derived via the Arrow-UDF extractor. ``--edges`` skips extraction and
+reads an edge table directly. The graph path reads ``--source``,
+``--edges`` and ``--init-ranks`` and writes ``--output`` through
+linkgraph.sources, so each accepts either form.
 Relaunching with the same --checkpoint-root/--run-id resumes mid-algorithm
 from the highest committed iteration.
 """
@@ -33,6 +36,7 @@ from linkgraph.operators import (
     wcc,
 )
 from linkgraph.runner import CheckpointStore
+from linkgraph.sources import load_bucketed_graph, load_table, write_table
 
 ALGOS = (
     "pagerank",
@@ -123,8 +127,10 @@ def build_parser() -> argparse.ArgumentParser:
     # not required at parse time: rmat is a pure generator with no input
     # table; every other algo family re-checks its own input in main()
     src = p.add_mutually_exclusive_group(required=False)
-    src.add_argument("--source", help="source-code table path (repo,path,commit,lang,content)")
-    src.add_argument("--edges", help="pre-built edge table path (src,dst[,weight])")
+    src.add_argument("--source", help="source-code table, Iceberg name or parquet path "
+                                      "(repo,path,commit,lang,content)")
+    src.add_argument("--edges", help="pre-built edge table, Iceberg name or parquet path "
+                                     "(src,dst[,weight])")
     src.add_argument("--bucketed-table",
                      help="catalog table written by save_bucketed_edges: opens the "
                           "graph WITHOUT the build-time repartition (the bucket "
@@ -221,7 +227,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--anomaly-top-k", type=int, default=20,
                    help="--algo anomalies rows kept by |z|")
     p.add_argument("--init-ranks", default=None,
-                   help="--algo pagerank warm-start state parquet (id, rank)")
+                   help="--algo pagerank warm-start state (id, rank), Iceberg "
+                        "name or parquet path")
     p.add_argument("--props-field", default="k",
                    help="--algo props_rollup JSON property name")
     p.add_argument("--query-ids", default="0",
@@ -285,8 +292,6 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     if args.bucketed_table:
-        from linkgraph.sources import load_bucketed_graph
-
         g = load_bucketed_graph(
             spark,
             args.bucketed_table,
@@ -296,11 +301,11 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         if args.source:
-            source = spark.read.parquet(args.source)
+            source = load_table(spark, args.source)
             edges, ids = extract_edges(source, dedupe=True, drop_self=True)
             n = args.num_vertices or ids.count()
         else:
-            edges = spark.read.parquet(args.edges)
+            edges = load_table(spark, args.edges)
             n = args.num_vertices
         g = Graph.from_edges(
             spark, edges, num_vertices=n, num_partitions=args.num_partitions
@@ -312,11 +317,9 @@ def main(argv: list[str] | None = None) -> int:
 
     t0 = time.monotonic()
     if args.algo == "pagerank":
-        # --init-ranks: warm-start from a prior run's (id, rank) parquet —
+        # --init-ranks: warm-start from a prior run's (id, rank) table —
         # the delta-crawl re-rank path (fixpoint is init-independent)
-        init_state = (
-            spark.read.parquet(args.init_ranks) if args.init_ranks else None
-        )
+        init_state = load_table(spark, args.init_ranks) if args.init_ranks else None
         result = pagerank(
             g, iterations=args.iterations, tol=args.tol, store=store,
             init_state=init_state,
@@ -477,7 +480,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         result = spmv(g)  # single join-agg pass — nothing to resume
 
-    result.write.mode("overwrite").parquet(args.output)
+    write_table(result, args.output)
     wall = time.monotonic() - t0
     n_edges = g.edges.count()
     print(

@@ -77,17 +77,31 @@ def extract_references(source: DataFrame) -> DataFrame:
 
 
 def assign_vertex_ids(source: DataFrame, key: str = "repo") -> DataFrame:
-    """Deterministic dense ids: sorted distinct keys → (key, id long).
+    """Deterministic dense ids: sorted distinct keys → (key, id long), the
+    id being the key's rank in sorted order.
 
-    Uses sort + zipWithIndex (distributed, stable) rather than a
-    row_number window, which would funnel every key through ONE partition
-    at 10^9-vertex scale. The reference takes dense ids as given
-    (NB_NODES CLI arg, random.c:66); we must mint them.
+    JVM-only and distributed: the range-partitioned sort is persisted, one
+    aggregate counts its rows per partition, the driver turns the counts
+    into per-partition offsets, and a row's id is its partition's offset
+    plus its position in the partition (monotonically_increasing_id minus
+    the partition index in its upper 31 bits). A row_number window would
+    funnel every key through ONE partition at 10^9-vertex scale, and an
+    RDD zipWithIndex runs per-row Python. The reference takes dense ids as
+    given (NB_NODES CLI arg, random.c:66); we must mint them.
     """
-    rdd = source.select(key).distinct().sort(key).rdd.map(lambda r: r[0])
-    return rdd.zipWithIndex().toDF([key, "id"]).select(
-        F.col(key), F.col("id").cast("long")
-    )
+    # persisted for as long as the ids are used: the offsets below are
+    # only valid for THIS partitioning, and a re-run sort may split the
+    # keys at different bounds
+    keys = source.select(key).distinct().sort(key).persist()
+    pid = F.spark_partition_id()
+    counts = dict(keys.groupBy(pid).count().collect())
+    offsets, total = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(total)
+        total += counts.get(p, 0)
+    start = F.lit(offsets).cast("array<long>")[pid]
+    position = F.monotonically_increasing_id() - pid.cast("long") * (1 << 33)
+    return keys.select(key, (start + position).alias("id"))
 
 
 def extract_edges(

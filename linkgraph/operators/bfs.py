@@ -15,8 +15,7 @@ Direction switching replicates the reference's degree-weighted rule
 JOINED INTO the level's delta before it is checkpointed, and the
 checkpoint is LAZY: the per-level (count, sum(out_deg)) aggregate is the
 one action that materializes the level AND returns the switch statistic —
-one Spark job per level, not a materialize job plus a stats job (the
-round-2 bfs regression: VERDICT r02 'What's wrong' #1).
+one Spark job per level, not a materialize job plus a stats job.
 
 Returned vertices: REACHED ones only (id, dist) — the sparse contract;
 unreached vertices are absent rather than carrying the reference's 0
@@ -37,10 +36,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
 from linkgraph.operators.direction import use_broadcast_frontier
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def bfs(
@@ -65,12 +61,10 @@ def bfs(
     A store holding more committed levels than ``max_iterations`` is
     clamped: only levels ≤ max_iterations are loaded, so the bound is
     honored across resumes."""
-    if store is not None:
-        commit = store.checkpointer
-        scratch = _default_checkpointer  # intermediates stay in memory
-    else:
-        commit = None
-        scratch = checkpointer or _default_checkpointer
+    commit = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
+    # the periodic truncation of the visited union is not a resume point:
+    # with a durable store it stays in memory
+    scratch = local_checkpoint if store is not None else commit
     # edges pre-joined with outdeg(dst): the next frontier's degree sum
     # falls out of the level's own groupBy — no per-level degrees join
     edges = graph.edges_with_dst_out_deg().select("src", "dst", "dst_out_deg")
@@ -93,23 +87,23 @@ def bfs(
             "out_deg", F.coalesce("out_deg", F.lit(0))
         )
 
-    resumed = store.latest_iteration() if store is not None else None
-    if resumed is not None:
-        start = min(resumed, max_iterations)  # honor the bound across resumes
+    start, deepest = store.resume(max_iterations) if store is not None else (0, None)
+    if deepest is not None:
+        # levels are committed as deltas: visited is their union up to start
         visited = store.load_upto(start)
-        if "out_deg" not in visited.columns:  # pre-round-3 store layout
+        if "out_deg" not in visited.columns:  # older store layout
             # normalize the WHOLE loaded set, not just the frontier: the
             # per-level visited.unionByName(nxt) below requires matching
-            # columns, and nxt always carries out_deg (ADVICE r03). Keep
-            # parent if the old store had it; synthesize it otherwise.
+            # columns, and nxt always carries out_deg. Keep parent if the
+            # old store had it; synthesize it otherwise.
             cols = ["id", "dist"] + (
                 ["parent"] if "parent" in visited.columns else []
             )
             visited = with_out_deg(visited.select(*cols))
             if "parent" not in visited.columns:
                 # Recompute REAL parents with one edges⋈visited join rather
-                # than fabricating parent=id for every loaded row (ADVICE
-                # r04): v's parent is min(src) among predecessors one level
+                # than fabricating parent=id for every loaded row: v's
+                # parent is min(src) among predecessors one level
                 # shallower — exactly the deterministic min-parent the live
                 # loop computes. Root keeps parent=root (its own row has no
                 # dist-1 predecessor, so the coalesce falls back to id —
@@ -150,11 +144,10 @@ def bfs(
             [(int(root), 0, int(root), root_deg)],
             "id long, dist long, parent long, out_deg long",
         )
-        visited = commit(seed, 0) if store is not None else scratch(seed, 0)
+        visited = commit(seed, 0)
         frontier = visited
         frontier_size, frontier_degree = 1, root_deg
         visited_rows = 1
-        start = 0
 
     for level in range(start + 1, max_iterations + 1):
         if frontier_size == 0:
@@ -191,17 +184,15 @@ def bfs(
             .join(seen, "id", "left_anti")
             .select("id", "dist", "parent", "out_deg")
         )
-        if store is not None:
-            # delta commit: only the newly discovered rows hit the store;
-            # the stats aggregate then re-reads the tiny committed delta
-            nxt = commit(nxt, level)
-        elif checkpointer is None:
+        if store is None and checkpointer is None:
             # LAZY plan truncation: no job here — delta_stats below is the
             # single action that materializes the level and returns the
             # switch statistic
             nxt = nxt.localCheckpoint(eager=False)
         else:
-            nxt = scratch(nxt, level)
+            # delta commit: only the newly discovered rows are committed;
+            # the stats aggregate then re-reads the tiny committed delta
+            nxt = commit(nxt, level)
         frontier_size, frontier_degree = delta_stats(nxt)
         visited_rows += frontier_size
         frontier = nxt

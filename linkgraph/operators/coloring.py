@@ -52,10 +52,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def graph_coloring(
@@ -70,7 +67,7 @@ def graph_coloring(
     color(v) ≤ deg(v) (isolated vertices get 0); proper — asserted in
     tests/test_coloring.py."""
     lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))

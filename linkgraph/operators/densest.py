@@ -36,10 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def densest_subgraph(
@@ -58,7 +55,7 @@ def densest_subgraph(
     if eps_num < 0 or eps_den <= 0:
         raise ValueError(f"epsilon must be ≥ 0, got {eps_num}/{eps_den}")
     lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))

@@ -38,10 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def feature_propagation(
@@ -59,7 +56,7 @@ def feature_propagation(
     from ``features`` are absent from the output (attach-policy is the
     caller's). ``dims`` truncates to the first D dimensions BEFORE the
     explode, so column pruning reaches the feature scan."""
-    checkpoint = checkpointer or _default_checkpointer
+    checkpoint = checkpointer or local_checkpoint
 
     vec = F.col(vec_col)
     if dims is not None:

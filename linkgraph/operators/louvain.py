@@ -60,10 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def louvain_move(
@@ -77,10 +74,7 @@ def louvain_move(
     round's labels; a relaunch continues from the highest committed round
     (fixed-round algorithm — the iteration index is the whole loop
     state)."""
-    if store is not None:
-        checkpoint = store.checkpointer
-    else:
-        checkpoint = checkpointer or _default_checkpointer
+    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
 
     canon = graph.canonical_undirected_edges()
     sym = canon.select(
@@ -89,11 +83,9 @@ def louvain_move(
     m = canon.count()  # one driver action, before the loop
     deg = sym.groupBy("src").agg(F.count("*").alias("d"))
 
-    start = 0
-    resumed = store.latest_iteration() if store is not None else None
+    start, resumed = store.resume(rounds) if store is not None else (0, None)
     if resumed is not None:
-        start = min(resumed, rounds)
-        state = store.load(start).select("id", "comm", "d")
+        state = resumed.select("id", "comm", "d")
     else:
         state = (
             graph.vertices()

@@ -30,10 +30,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def maximal_matching(
@@ -103,7 +100,7 @@ def _greedy_rounds(
     match every edge that is the (p, a, b)-minimum at both endpoints,
     retire matched stars, repeat to an empty alive set."""
     lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    checkpoint = checkpointer or local_checkpoint
     alive = alive.localCheckpoint(eager=False) if lazy else checkpoint(alive, 0)
     n_alive = alive.count()
     matched: DataFrame | None = None

@@ -28,10 +28,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def maximal_independent_set(
@@ -46,7 +43,7 @@ def maximal_independent_set(
     (no two members adjacent) and maximal (every non-member has a member
     neighbor) — both properties are asserted in tests/test_mis.py."""
     lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))

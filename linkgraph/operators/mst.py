@@ -46,10 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def minimum_spanning_forest(
@@ -65,7 +62,7 @@ def minimum_spanning_forest(
     resumed labels' merge history is NOT stored, so resume restarts the
     forest — Borůvka's ≤log V rounds make re-running cheap; the store
     hook exists for lineage-truncation parity with the other kernels."""
-    checkpoint = checkpointer or (store.checkpointer if store is not None else _default_checkpointer)
+    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
 
     e = graph.edges.filter(F.col("src") != F.col("dst"))
     canon = (

@@ -30,10 +30,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
 from linkgraph.operators.direction import use_broadcast_frontier
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def sssp(
@@ -63,16 +60,11 @@ def sssp(
     ``store`` commits each round's merged state (which carries old_dist,
     so the improved-rows frontier is reconstructible on relaunch); a store
     holding more rounds than ``max_iterations`` is clamped to the bound."""
-    if store is not None:
-        checkpoint = store.checkpointer
-        lazy = False
-    else:
-        checkpoint = checkpointer or _default_checkpointer
-        # default path: checkpoint LAZILY — the frontier-stats aggregate is
-        # then the single action that materializes the round AND returns
-        # the switch statistic (one job/round, not two; VERDICT r02
-        # 'What's wrong' #1)
-        lazy = checkpointer is None
+    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
+    # default path: checkpoint LAZILY — the frontier-stats aggregate is
+    # then the single action that materializes the round AND returns the
+    # switch statistic (one job/round, not two)
+    lazy = store is None and checkpointer is None
     # edges pre-joined with outdeg(dst): the improved set's degree sum
     # rides the relaxation groupBy — no per-round degrees join
     base = graph.edges_with_dst_out_deg()
@@ -104,10 +96,8 @@ def sssp(
         )
         return int(row["n"]), int(row["d"])
 
-    resumed = store.latest_iteration() if store is not None else None
-    if resumed is not None:
-        resumed = min(resumed, max_iterations)  # honor the bound across resumes
-        loaded = store.load(resumed)
+    start, loaded = store.resume(max_iterations) if store is not None else (0, None)
+    if loaded is not None:
         dist = loaded.select("id", "dist", "parent")
         if "old_dist" in loaded.columns:
             frontier = loaded.filter(
@@ -118,7 +108,6 @@ def sssp(
         frontier_size, frontier_degree = frontier_stats(frontier)
         if frontier_size == 0:
             return dist if return_parents else dist.select("id", "dist")
-        start = resumed
     else:
         dist = graph.spark.createDataFrame(
             [(int(root), 0.0, int(root))], "id long, dist double, parent long"
@@ -131,7 +120,6 @@ def sssp(
         deg_row = deg.filter(F.col("id") == int(root)).collect()
         frontier_size = 1
         frontier_degree = int(deg_row[0]["out_deg"]) if deg_row else 0
-        start = 0
 
     for it in range(start + 1, max_iterations + 1):
         push = use_broadcast_frontier(

@@ -1,4 +1,4 @@
-"""Triangle counting via ordered wedge join.
+"""Triangle counting via sorted-adjacency intersection.
 
 Not in the reference binary set; named by the north rule as a natural
 extension of the reference's sorted-adjacency machinery (the per-list dst
@@ -8,19 +8,21 @@ intersection cheap — exactly what triangle counting needs).
 Formulation (the standard DataFrame compact-forward algorithm):
 1. canonicalize to undirected simple edges (a < b), dropping self-loops
    and multi-edges;
-2. wedges: e1(a,b) ⋈ e2(b,c) on b, giving paths a-b-c with a < b < c;
-3. close: semi-join wedges against the edge set on (a,c).
+2. orient every edge u → v along a total order and collect each vertex's
+   sorted out-neighbor array;
+3. per oriented edge u → v, every w in adj[u] ∩ adj[v] closes the
+   triangle u-v-w.
 
-Each triangle {x<y<z} is produced exactly once (as the wedge x-y-z closed
-by (x,z)), so the global count needs no division.
+Each triangle {x≺y≺z} is produced exactly once (at its edge x → y, with
+w = z), so the global count needs no division.
 
-Scale notes: step 2's join explodes around high-degree hubs — Σ deg(v)²
-intermediate rows. The classical mitigation (orient edges from the sorted
-a<b canonical form by DEGREE instead of id: low-degree → high-degree)
-bounds wedge counts by arboricity; provided as ``degree_oriented=True``
-(default) — both orientations count the same triangles, the degree
-orientation just bounds the skew, trading two extra degree-join shuffles
-for a wedge set bounded by O(E^1.5) instead of Σdeg².
+Scale notes: in id order a hub's out-neighbor array grows with its
+degree (Σ deg(v)² intersect work). Orienting by DEGREE instead
+(low-degree → high-degree) bounds every out-neighbor array by O(√E);
+provided as ``degree_oriented=True`` (default) — both orientations count
+the same triangles, the degree orientation just bounds the skew, trading
+two extra degree-join shuffles for O(E^1.5) total work instead of
+Σdeg².
 """
 
 from __future__ import annotations
@@ -36,15 +38,12 @@ def _oriented_edges(graph: Graph, degree_oriented: bool) -> DataFrame:
 
 
 def _oriented_from_canon(canon: DataFrame, degree_oriented: bool) -> DataFrame:
-    """Given a canonical a<b deduped edge set, return it plus an
-    orientation (u → v) where u precedes v in the chosen total order (id
-    order, or (degree, id) order), and the (a, b) pair for the closing
-    semi-join. Canon-level so subgraph passes (operators/truss.py peels
+    """Given a canonical a<b deduped edge set, return its orientation
+    (u, v): u precedes v in the chosen total order (id order, or (degree,
+    id) order). Canon-level so subgraph passes (operators/truss.py peels
     a shrinking edge set) reuse the same machinery."""
     if not degree_oriented:
-        return canon.select(
-            F.col("a").alias("u"), F.col("b").alias("v"), F.col("a"), F.col("b")
-        )
+        return canon.select(F.col("a").alias("u"), F.col("b").alias("v"))
     # degree in the undirected simple graph
     deg = (
         canon.select(F.col("a").alias("id"))
@@ -62,31 +61,7 @@ def _oriented_from_canon(canon: DataFrame, degree_oriented: bool) -> DataFrame:
     return e.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        "a",
-        "b",
     )
-
-
-def _closed_wedges(graph: Graph, degree_oriented: bool) -> DataFrame:
-    return _closed_wedges_from_canon(
-        graph.canonical_undirected_edges(), degree_oriented
-    )
-
-
-def _closed_wedges_from_canon(canon: DataFrame, degree_oriented: bool) -> DataFrame:
-    """Each triangle {x<y<z} of the canonical edge set exactly once, as
-    (u, v, w) in orientation order with (a, b) = (min(u,w), max(u,w))."""
-    e = _oriented_from_canon(canon, degree_oriented)
-    out1 = e.select("u", "v")
-    out2 = e.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    wedges = out1.join(out2, "v").select(
-        "u",
-        "v",
-        "w",
-        F.least("u", "w").alias("a"),
-        F.greatest("u", "w").alias("b"),
-    )
-    return wedges.join(canon, ["a", "b"], "left_semi")
 
 
 def _triangle_stream_from_canon(canon: DataFrame, degree_oriented: bool) -> DataFrame:
@@ -98,8 +73,8 @@ def _triangle_stream_from_canon(canon: DataFrame, degree_oriented: bool) -> Data
     set (Σ deg⁺² rows — 76M vs 22M triangles on the dense sf0.1 gate
     graph, measured 24→7 s for per-vertex counts) is never materialized
     or shuffled. Degree orientation bounds each adjacency array by
-    O(√E̅), the same argument as triangle_count's adjacency method."""
-    e = _oriented_from_canon(canon, degree_oriented).select("u", "v")
+    O(√E̅), the same argument as triangle_count's."""
+    e = _oriented_from_canon(canon, degree_oriented)
     adj = e.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("nbrs"))
     au = adj.select(F.col("u").alias("_u"), F.col("nbrs").alias("nbrs_u"))
     av = adj.select(F.col("u").alias("_v"), F.col("nbrs").alias("nbrs_v"))
@@ -110,24 +85,18 @@ def _triangle_stream_from_canon(canon: DataFrame, degree_oriented: bool) -> Data
     )
 
 
-def triangle_count(
-    graph: Graph, degree_oriented: bool = True, method: str = "adjacency"
-) -> DataFrame:
+def triangle_count(graph: Graph, degree_oriented: bool = True) -> DataFrame:
     """Global triangle count; DataFrame with a single row (triangles: long).
 
-    ``method='adjacency'`` (default) builds degree-oriented sorted
-    neighbor arrays and counts ``size(array_intersect(adj[u], adj[v]))``
-    per edge — the reference's sorted-adjacency intersection
-    (init_all.c:703-712 sorts neighbor lists for exactly this). It never
-    materializes the wedge set (O(E·d̄) element ops in-operator instead of
-    an O(wedges)-row shuffle — same wall time on the dense sf0.1 gate
-    graph, far less shuffle memory, which is what matters at 100 TB).
-    ``method='wedges'`` is the two-join formulation; identical counts.
+    Builds degree-oriented sorted neighbor arrays and counts
+    ``size(array_intersect(adj[u], adj[v]))`` per edge — the reference's
+    sorted-adjacency intersection (init_all.c:703-712 sorts neighbor lists
+    for exactly this). It never materializes the wedge set (O(E·d̄)
+    element ops in-operator instead of an O(wedges)-row shuffle — same
+    wall time on the dense sf0.1 gate graph as the two-join wedge plan,
+    far less shuffle memory, which is what matters at 100 TB).
     """
-    if method == "wedges":
-        tri = _closed_wedges(graph, degree_oriented)
-        return tri.agg(F.count("*").alias("triangles"))
-    oriented = _oriented_edges(graph, degree_oriented).select("u", "v")
+    oriented = _oriented_edges(graph, degree_oriented)
     # neighbor ids as INT when the vertex space fits: the second
     # adjacency join re-exchanges every edge row still carrying nbrs_u —
     # the operator's one heavy shuffle, O(E·d̄) array bytes — and the
@@ -287,14 +256,14 @@ def four_clique_count(graph: Graph, degree_oriented: bool = True) -> DataFrame:
     ``size(array_intersect(common_uv, adj[w]))`` — x ≻ w adjacent to all
     three. Each 4-clique {u≺v≺w≺x} is counted exactly once, at its
     unique orientation-minimal triangle. Same scale argument as
-    triangle_count's adjacency method: degree orientation bounds every
+    triangle_count: degree orientation bounds every
     adjacency array by O(√E̅), the per-triangle intersect is in-operator
     (no wedge/triangle shuffle beyond the E' adjacency build and the
     |triangles| stream rows), and hub skew never materializes Σdeg²
     rows. Chiba-Nishizeki clique listing, DataFrame form.
     """
     canon = graph.canonical_undirected_edges()
-    e = _oriented_from_canon(canon, degree_oriented).select("u", "v")
+    e = _oriented_from_canon(canon, degree_oriented)
     adj = e.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("nbrs"))
     au = adj.select(F.col("u").alias("_u"), F.col("nbrs").alias("nbrs_u"))
     av = adj.select(F.col("u").alias("_v"), F.col("nbrs").alias("nbrs_v"))

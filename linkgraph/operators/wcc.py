@@ -29,10 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import local_checkpoint
 
 
 def _edge_fingerprint(df: DataFrame) -> tuple:
@@ -68,18 +65,15 @@ def wcc(
 
     ``store`` makes the run resumable: each committed iteration carries
     (id, old_comp, comp), so the worklist frontier (rows where comp
-    shrank) is reconstructible from the stored state alone.
+    shrank) is reconstructible from the stored state alone. A store
+    holding more rounds than ``max_iterations`` resumes from round
+    ``max_iterations``, so the bound is honored across relaunches.
     """
-    if store is not None:
-        checkpoint = store.checkpointer
-    else:
-        checkpoint = checkpointer or _default_checkpointer
+    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
     sym = graph.symmetrized().edges.select("src", "dst")
 
-    start = 0
-    resumed = store.latest_iteration() if store is not None else None
-    if resumed is not None:
-        loaded = store.load(resumed)
+    start, loaded = store.resume(max_iterations) if store is not None else (0, None)
+    if loaded is not None:
         comp = loaded.select("id", "comp")
         if "old_comp" in loaded.columns:
             frontier = loaded.filter(F.col("comp") < F.col("old_comp")).select("id", "comp")
@@ -87,7 +81,6 @@ def wcc(
                 return comp
         else:
             frontier = comp
-        start = resumed
     else:
         comp = graph.vertices().select("id", F.col("id").alias("comp"))
         comp = checkpoint(comp, 0)
@@ -145,7 +138,7 @@ def wcc_large_small_star(
     valid at the fixpoint, so falling through silently would return wrong
     components.
     """
-    checkpoint = checkpointer or _default_checkpointer
+    checkpoint = checkpointer or local_checkpoint
     # working edge set, symmetrized & deduped; self-loops are irrelevant
     edges = (
         graph.symmetrized()
@@ -208,7 +201,7 @@ def wcc_large_small_star(
         # the terminal round only (O(E') once, not per round): equal exact
         # counts ride in the fingerprint, so a one-sided empty difference
         # proves set equality — a ≈2^-128 collision can cost one extra
-        # round, never a wrong answer (VERDICT r02 'What's wrong' #2).
+        # round, never a wrong answer.
         fp = _edge_fingerprint(new_edges)
         if fp == prev_fp and new_edges.exceptAll(edges).isEmpty():
             edges = new_edges

@@ -5,8 +5,13 @@ destruct in one process; a crash loses everything. Our north rule requires
 every iteration's vertex state to be durably checkpointed with
 per-partition lineage + metrics so a relaunched job resumes mid-algorithm.
 
-``CheckpointStore`` provides the ``checkpointer(df, iteration)`` hook the
-kernels already accept. Each call:
+Every iterative operator follows one protocol: it commits each round
+through a ``checkpointer(df, iteration)`` function — ``store.checkpointer``
+when a durable ``CheckpointStore`` is given, else the caller's
+checkpointer, else :func:`local_checkpoint` — and a relaunch takes its
+start round and state from ``CheckpointStore.resume(bound)``.
+
+``CheckpointStore.checkpointer`` is the durable commit. Each call:
 
 1. writes the iteration's state to ``{root}/{algo}/{run_id}/iter_NNNNN``
    (parquet by default; ``fmt='iceberg'`` swaps every write/read to
@@ -32,6 +37,13 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def local_checkpoint(df: DataFrame, iteration: int) -> DataFrame:
+    """The default in-memory commit: an eager ``localCheckpoint`` truncates
+    the iterative plan's lineage without making the round durable."""
+    return df.localCheckpoint(eager=True)
+
 
 METRICS_SCHEMA = (
     "algo string, run_id string, iteration int, partition_id int, "
@@ -106,20 +118,20 @@ class CheckpointStore:
         return jvm, path.getFileSystem(hconf)
 
     def latest_iteration(self) -> int | None:
-        """Highest committed (has _SUCCESS) iteration, or None."""
-        jvm, fs = self._hadoop_fs()
-        run_path = jvm.org.apache.hadoop.fs.Path(self._run_dir())
-        if not fs.exists(run_path):
-            return None
-        best = None
-        for status in fs.listStatus(run_path):
-            name = status.getPath().getName()
-            if name.startswith("iter_") and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(status.getPath(), self._marker)
-            ):
-                k = int(name.split("_")[1])
-                best = k if best is None else max(best, k)
-        return best
+        """Highest committed iteration, or None."""
+        return max(self.committed_iterations(), default=None)
+
+    def resume(self, bound: int) -> tuple[int, DataFrame | None]:
+        """``(start, state)`` for a relaunch that runs at most ``bound``
+        rounds: the highest committed iteration clamped to ``bound`` — a
+        store holding more rounds than asked for must not answer with the
+        over-iterated state — and that iteration's state; ``(0, None)``
+        when nothing is committed."""
+        latest = self.latest_iteration()
+        if latest is None:
+            return 0, None
+        start = min(latest, bound)
+        return start, self.load(start)
 
     def load(self, iteration: int) -> DataFrame:
         return self.spark.read.format(self.fmt).load(self._iter_dir(iteration))
@@ -147,11 +159,11 @@ class CheckpointStore:
         parquet: ONE multi-path scan (not an N-way union plan, so a
         diameter-deep run resumes without a giant logical plan), with
         ``mergeSchema`` so a store whose early iterations predate a column
-        (e.g. pre-round-3 BFS deltas without out_deg) still reads as one
+        (e.g. older BFS deltas without out_deg) still reads as one
         consistent schema — missing columns come back null and the caller
         normalizes them. Other formats (iceberg): path-list loads are not
         supported by the source, so each committed iteration is loaded
-        separately and unioned by name (ADVICE r03)."""
+        separately and unioned by name."""
         its = [k for k in self.committed_iterations() if k <= iteration]
         if not its:
             raise ValueError(f"no committed iterations ≤ {iteration}")

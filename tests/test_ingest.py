@@ -69,6 +69,20 @@ def test_vertex_ids_deterministic_and_dense(spark):
     assert keys == sorted(keys)  # id order = sorted key order
 
 
+def test_vertex_ids_are_sorted_rank_minted_on_the_jvm(spark):
+    """id = the key's rank in sorted order across several sort partitions,
+    and the executed plan scans no Python RDD (no per-row Python)."""
+    source = spark.range(0, 3000, numPartitions=5).select(
+        F.format_string("r%05d", (F.col("id") * 7919) % 997).alias("repo")
+    )
+    ids = assign_vertex_ids(source)
+    got = _id_map(ids)
+    assert len(got) == 997
+    assert got == {k: i for i, k in enumerate(sorted(got))}
+    plan = ids._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "ExistingRDD" not in plan and "Python" not in plan
+
+
 def test_pagerank_on_extracted_graph(spark):
     """End-to-end: source table → edges → PageRank == NumPy oracle of the
     planted plan (translated through the deterministic id map)."""
