@@ -281,8 +281,8 @@ def main() -> None:
         return out
 
     # ---------------- gate graph: headline PR-to-convergence + kernels
-    # iteration count via the info out-param — a counting checkpointer
-    # would opt the run out of the lazy/adaptive convergence fast path
+    # iteration count via the info out-param, so the timed run uses the
+    # default in-memory commit
     pr_info: dict = {}
     timed(
         "pagerank_conv",

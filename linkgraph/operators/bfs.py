@@ -29,8 +29,6 @@ O(V · diameter); resume unions committed levels in one multi-path scan
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,7 +43,6 @@ def bfs(
     max_iterations: int = 10_000,
     broadcast_frontier_max: int = 1_000_000,
     return_parents: bool = False,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     store=None,
 ) -> DataFrame:
     """Returns DataFrame(id: long, dist: long[, parent: long]) for vertices
@@ -61,10 +58,7 @@ def bfs(
     A store holding more committed levels than ``max_iterations`` is
     clamped: only levels ≤ max_iterations are loaded, so the bound is
     honored across resumes."""
-    commit = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
-    # the periodic truncation of the visited union is not a resume point:
-    # with a durable store it stays in memory
-    scratch = local_checkpoint if store is not None else commit
+    commit = store.checkpointer if store is not None else local_checkpoint
     # edges pre-joined with outdeg(dst): the next frontier's degree sum
     # falls out of the level's own groupBy — no per-level degrees join
     edges = graph.edges_with_dst_out_deg().select("src", "dst", "dst_out_deg")
@@ -74,8 +68,8 @@ def bfs(
     def delta_stats(delta: DataFrame) -> tuple[int, int]:
         """(rows, out-degree sum) of a delta that CARRIES out_deg — a pure
         aggregate, no join (the enqueue-time degree bookkeeping of
-        buffer.c:272-282, batched). For the default (lazy-checkpoint)
-        path this aggregate IS the level's materializing action."""
+        buffer.c:272-282, batched). In memory this aggregate IS the
+        level's materializing action."""
         row = delta.agg(
             F.count("*").alias("n"),
             F.coalesce(F.sum("out_deg"), F.lit(0)).alias("d"),
@@ -184,15 +178,8 @@ def bfs(
             .join(seen, "id", "left_anti")
             .select("id", "dist", "parent", "out_deg")
         )
-        if store is None and checkpointer is None:
-            # LAZY plan truncation: no job here — delta_stats below is the
-            # single action that materializes the level and returns the
-            # switch statistic
-            nxt = nxt.localCheckpoint(eager=False)
-        else:
-            # delta commit: only the newly discovered rows are committed;
-            # the stats aggregate then re-reads the tiny committed delta
-            nxt = commit(nxt, level)
+        # delta commit: only the newly discovered rows are committed
+        nxt = commit(nxt, level)
         frontier_size, frontier_degree = delta_stats(nxt)
         visited_rows += frontier_size
         frontier = nxt
@@ -201,10 +188,11 @@ def bfs(
         # visited is a union of ALREADY-CHECKPOINTED deltas — nothing to
         # recompute, so re-checkpointing it per level is pure scheduler
         # latency (BFS is level-latency-bound at any scale). Truncate the
-        # growing union plan only every 8 levels.
+        # growing union plan only every 8 levels; the cut is not a resume
+        # point, so it stays in memory even with a durable store.
         visited = visited.unionByName(nxt)
         if level % 8 == 0:
-            visited = scratch(visited, level)
+            visited = visited.localCheckpoint(eager=True)
 
     out = visited if return_parents else visited.select("id", "dist")
     return out.select(*[c for c in out.columns if c != "out_deg"])

@@ -45,29 +45,23 @@ are asserted in tests/test_coloring.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-from linkgraph.runner import local_checkpoint
 
 
 def graph_coloring(
     graph: Graph,
     seed: int = 42,
     max_iterations: int = 100,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """(id, color) over the FULL vertex set: a proper coloring of the
     UNDIRECTED SIMPLE view of ``graph`` by deterministic random-palette
     rounds (Johansson) with md5-priority conflict resolution. Per vertex
     color(v) ≤ deg(v) (isolated vertices get 0); proper — asserted in
     tests/test_coloring.py."""
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -75,7 +69,7 @@ def graph_coloring(
     # simple undirected degree — the per-vertex palette size − 1; reused
     # every round, materialized once
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
-    deg = deg.localCheckpoint(eager=True) if lazy else checkpoint(deg, -2)
+    deg = deg.localCheckpoint(eager=True)
 
     pri = _md5_60(f"concat('color:{int(seed)}:', CAST(id AS STRING))")
     alive = (
@@ -84,8 +78,8 @@ def graph_coloring(
         .join(deg, "id", "left")
         .select("id", "p", F.coalesce("deg", F.lit(0)).alias("deg"))
     )
-    alive = alive.localCheckpoint(eager=False) if lazy else checkpoint(alive, 0)
-    live_e = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, -1)
+    alive = alive.localCheckpoint(eager=False)
+    live_e = sym.localCheckpoint(eager=False)
     n_alive = alive.count()
     colored: DataFrame | None = None
 
@@ -116,7 +110,7 @@ def graph_coloring(
             )
             # nc feeds BOTH the palette-size count and the skip formula —
             # materialize once (fan-out recompute pitfall)
-            nc = nc.localCheckpoint(eager=True) if lazy else checkpoint(nc, 4000 + it)
+            nc = nc.localCheckpoint(eager=True)
             used = nc.groupBy("id").agg(F.count("*").alias("m"))
             tentj = (
                 alive.join(used, "id", "left")
@@ -156,7 +150,7 @@ def graph_coloring(
             )
         # tent fans out into the conflict self-join (both sides) AND the
         # winner/loser splits — materialize once
-        tent = tent.localCheckpoint(eager=True) if lazy else checkpoint(tent, it)
+        tent = tent.localCheckpoint(eager=True)
         # 3. losers: alive-alive edges with equal tentative colors; the
         #    (p, id)-greater endpoint retries next round
         ta = tent.select(
@@ -178,23 +172,17 @@ def graph_coloring(
             .select(F.col("src").alias("id"))
             .distinct()
         )
-        losers = (
-            losers.localCheckpoint(eager=True) if lazy else checkpoint(losers, 1000 + it)
-        )
+        losers = losers.localCheckpoint(eager=True)
         newly = tent.join(losers, "id", "left_anti").select("id", "color")
         colored = newly if colored is None else colored.unionByName(newly)
         # shrink the frontier and its live edge set
         nxt = alive.join(losers, "id", "left_semi")
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, 2000 + it)
+        nxt = nxt.localCheckpoint(eager=False)
         lid = losers.select(F.col("id"))
         live_e = live_e.join(lid, live_e["src"] == lid["id"], "left_semi").join(
             lid, live_e["dst"] == lid["id"], "left_semi"
         )
-        live_e = (
-            live_e.localCheckpoint(eager=False)
-            if lazy
-            else checkpoint(live_e, 3000 + it)
-        )
+        live_e = live_e.localCheckpoint(eager=False)
         n_alive = nxt.count()
         alive = nxt
     else:

@@ -30,13 +30,10 @@ shrinking edge set, O(E') per round and monotone.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-from linkgraph.runner import local_checkpoint
 
 
 def densest_subgraph(
@@ -44,7 +41,6 @@ def densest_subgraph(
     eps_num: int = 1,
     eps_den: int = 10,
     max_iterations: int = 300,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """(id, density) — the vertices of the densest peel level (a
     2(1+ε)-approximate densest subgraph of the UNDIRECTED SIMPLE view,
@@ -54,19 +50,17 @@ def densest_subgraph(
     maximizing the IEEE-double density. Empty graph → empty result."""
     if eps_num < 0 or eps_den <= 0:
         raise ValueError(f"epsilon must be ≥ 0, got {eps_num}/{eps_den}")
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    alive = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, 0)
+    alive = sym.localCheckpoint(eager=False)
 
     best_df: DataFrame | None = None
     best_density = -1.0
     thresh = eps_den + eps_num
 
-    for it in range(1, max_iterations + 1):
+    for _ in range(max_iterations):
         row = alive.agg(
             F.count("*").alias("ns"), F.countDistinct("src").alias("nv")
         ).collect()[0]
@@ -86,7 +80,7 @@ def densest_subgraph(
         nxt = alive.join(keep, alive["src"] == keep["id"], "left_semi").join(
             keep, F.col("dst") == keep["id"], "left_semi"
         )
-        alive = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, it)
+        alive = nxt.localCheckpoint(eager=False)
     else:
         # the emptiness test lives at loop TOP, so a peel that empties
         # exactly on round max_iterations exhausts the for — re-check

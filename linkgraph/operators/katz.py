@@ -22,8 +22,8 @@ Spark shape: per round ONE edges⋈state join + groupBy(dst) aggregate,
 re-densified against the vertex set (isolated / zero-in-degree vertices
 hold β). The state is lazily localCheckpointed each round — the
 recurrence consumes the previous round exactly once, so lineage
-truncation (not eager materialization) is all that's needed; identical
-to the pagerank.py non-unrolled path.
+truncation (not eager materialization) is all that's needed — the same
+lazy cut as linkgraph.runner.local_checkpoint.
 """
 
 from __future__ import annotations

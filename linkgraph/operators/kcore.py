@@ -42,18 +42,12 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be ≥ 1, got {k}")
-    # LAZY plan truncation on the default path (the BFS/SSSP shape): the
-    # per-round count() below is the SINGLE action that materializes the
-    # round's lazily-marked checkpoint AND tests convergence — one Spark
-    # job per peel round, not a materialize job plus a count job. An
-    # explicit checkpointer (durable store) keeps its own commit job.
-    lazy = checkpointer is None
     checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()  # (a, b), a < b, deduped
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    alive = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, 0)
+    alive = checkpoint(sym, 0)
     n_alive = alive.count()
 
     for it in range(1, max_iterations + 1):
@@ -65,7 +59,9 @@ def k_core(
             alive.join(keep, alive["src"] == keep["id"], "left_semi")
             .join(keep, F.col("dst") == keep["id"], "left_semi")
         )
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, it)
+        # the count is the round's one job: it materializes the cut AND
+        # tests convergence
+        nxt = checkpoint(nxt, it)
         n_next = nxt.count()
         if n_next == n_alive:
             break
@@ -89,7 +85,6 @@ def k_core(
 def coreness(
     graph: Graph,
     max_iterations: int = 100,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """Full k-core DECOMPOSITION: DataFrame(id: long, coreness: long) —
     every vertex's core number (the largest k whose k-core contains it)
@@ -115,11 +110,6 @@ def coreness(
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
-    # lazy default-path checkpoints: the changed-count below is the one
-    # action per H-round (materializes the checkpoint AND returns the
-    # convergence statistic) — see k_core
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     # partitioned by the JOIN key once and PERSISTED (not checkpointed:
     # a LogicalRDD loses its outputPartitioning, an InMemoryRelation
@@ -136,14 +126,14 @@ def coreness(
         sym.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("c"))
     )
-    c = c.localCheckpoint(eager=False) if lazy else checkpoint(c, 0)
+    c = c.localCheckpoint(eager=False)
 
     w = (
         Window.partitionBy("src")
         .orderBy(F.desc("cval"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    for it in range(1, max_iterations + 1):
+    for _ in range(max_iterations):
         hist = (
             sym.join(c, sym["dst"] == c["id"])
             .groupBy("src", F.col("c").alias("cval"))
@@ -158,7 +148,8 @@ def coreness(
         merged = c.join(h, "id").select(
             "id", F.col("c").alias("old"), F.col("h").alias("c")
         )
-        merged = merged.localCheckpoint(eager=False) if lazy else checkpoint(merged, it)
+        # the changed-count is the H-round's one job (see k_core)
+        merged = merged.localCheckpoint(eager=False)
         changed = merged.filter(F.col("c") != F.col("old")).count()
         c = merged.select("id", "c")
         if changed == 0:
@@ -181,7 +172,6 @@ def coreness(
 def onion_decomposition(
     graph: Graph,
     max_iterations: int = 400,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """Onion decomposition (Hébert-Dufresne, Grochow & Allard, Sci. Rep.
     2016): DataFrame(id, layer, onion_core) — the k-core peel REFINED
@@ -205,13 +195,11 @@ def onion_decomposition(
     of onion layers ≤ peeling depth ≤ O(V) worst case (bare path),
     guarded loudly by ``max_iterations``.
     """
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    alive_e = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, 0)
+    alive_e = sym.localCheckpoint(eager=False)
     alive_v = graph.vertices()
     core = 0
     layers: list[DataFrame] = []
@@ -226,7 +214,7 @@ def onion_decomposition(
             )
             .select("id", F.coalesce("d", F.lit(0)).cast("long").alias("d"))
         )
-        deg = deg.localCheckpoint(eager=False) if lazy else checkpoint(deg, layer)
+        deg = deg.localCheckpoint(eager=False)
         stats = deg.agg(
             F.min("d").alias("kmin"), F.count("*").alias("n")
         ).collect()[0]
@@ -244,7 +232,7 @@ def onion_decomposition(
         nxt = alive_e.join(
             alive_v, alive_e["src"] == alive_v["id"], "left_semi"
         ).join(alive_v, F.col("dst") == F.col("id"), "left_semi")
-        alive_e = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, layer)
+        alive_e = nxt.localCheckpoint(eager=False)
     else:
         raise RuntimeError(
             f"onion_decomposition: peel did not converge in "

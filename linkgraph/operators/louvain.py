@@ -54,8 +54,6 @@ rule).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,7 +64,6 @@ from linkgraph.runner import local_checkpoint
 def louvain_move(
     graph: Graph,
     rounds: int = 4,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     store=None,
 ) -> DataFrame:
     """Returns DataFrame(id: long, comm: long) after ``rounds``
@@ -74,7 +71,7 @@ def louvain_move(
     round's labels; a relaunch continues from the highest committed round
     (fixed-round algorithm — the iteration index is the whole loop
     state)."""
-    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
+    checkpoint = store.checkpointer if store is not None else local_checkpoint
 
     canon = graph.canonical_undirected_edges()
     sym = canon.select(

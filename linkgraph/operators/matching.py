@@ -23,21 +23,17 @@ action. ``max_iterations`` guards the adversarial case loudly.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-from linkgraph.runner import local_checkpoint
 
 
 def maximal_matching(
     graph: Graph,
     seed: int = 42,
     max_iterations: int = 100,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """(a, b) — the greedy maximal matching of the UNDIRECTED SIMPLE view
     of ``graph`` in md5-edge-priority order: a set of vertex-disjoint
@@ -48,13 +44,12 @@ def maximal_matching(
         f"concat('match:{int(seed)}:', CAST(a AS STRING), ':', CAST(b AS STRING))"
     )
     alive = graph.canonical_undirected_edges().select("a", "b", pri.alias("p"))
-    return _greedy_rounds(alive, max_iterations, checkpointer, "maximal_matching")
+    return _greedy_rounds(alive, max_iterations, "maximal_matching")
 
 
 def maximal_weight_matching(
     graph: Graph,
     max_iterations: int = 100,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """(a, b, weight) — the LOCALLY-DOMINANT greedy weighted matching
     (Preis 1999 / Manne-Bisseling 2007): identical rounds to
@@ -82,9 +77,7 @@ def maximal_weight_matching(
         "b",
         (F.shiftleft(F.lit(18).cast("long") - w, 56) + F.shiftright(h, 4)).alias("p"),
     )
-    out = _greedy_rounds(
-        alive, max_iterations, checkpointer, "maximal_weight_matching"
-    )
+    out = _greedy_rounds(alive, max_iterations, "maximal_weight_matching")
     return out.select(
         "a", "b", (F.col("a") % 10 + F.col("b") % 10).cast("long").alias("weight")
     )
@@ -93,19 +86,16 @@ def maximal_weight_matching(
 def _greedy_rounds(
     alive: DataFrame,
     max_iterations: int,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None,
     who: str,
 ) -> DataFrame:
     """Shared deterministic-greedy round loop over an (a, b, p) alive set:
     match every edge that is the (p, a, b)-minimum at both endpoints,
     retire matched stars, repeat to an empty alive set."""
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
-    alive = alive.localCheckpoint(eager=False) if lazy else checkpoint(alive, 0)
+    alive = alive.localCheckpoint(eager=False)
     n_alive = alive.count()
     matched: DataFrame | None = None
 
-    for it in range(1, max_iterations + 1):
+    for _ in range(max_iterations):
         if n_alive == 0:
             break
         inc = alive.select(F.col("a").alias("v"), "p", "a", "b").unionByName(
@@ -121,7 +111,7 @@ def _greedy_rounds(
             .filter((me == F.col("ma")) & (me == F.col("mb")))
             .select("a", "b")
         )
-        win = win.localCheckpoint(eager=True) if lazy else checkpoint(win, it)
+        win = win.localCheckpoint(eager=True)
         matched = win if matched is None else matched.unionByName(win)
         dead = win.select(F.col("a").alias("v")).unionByName(
             win.select(F.col("b").alias("v"))
@@ -130,7 +120,7 @@ def _greedy_rounds(
             alive.join(dead, alive["a"] == dead["v"], "left_anti")
             .join(dead, alive["b"] == dead["v"], "left_anti")
         )
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, 1000 + it)
+        nxt = nxt.localCheckpoint(eager=False)
         n_alive = nxt.count()  # materializes the round's alive set
         alive = nxt
     else:

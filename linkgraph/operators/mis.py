@@ -21,40 +21,34 @@ adversarial long-chain case loudly.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-from linkgraph.runner import local_checkpoint
 
 
 def maximal_independent_set(
     graph: Graph,
     seed: int = 42,
     max_iterations: int = 100,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """(id, in_mis) over the FULL vertex set: the greedy maximal
     independent set of the UNDIRECTED SIMPLE view of ``graph`` in
     md5-priority order (isolated vertices are always in). Independent
     (no two members adjacent) and maximal (every non-member has a member
     neighbor) — both properties are asserted in tests/test_mis.py."""
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
     pri = _md5_60(f"concat('mis:{int(seed)}:', CAST(id AS STRING))")
     alive = graph.vertices().select("id", pri.alias("p"))
-    alive = alive.localCheckpoint(eager=False) if lazy else checkpoint(alive, 0)
+    alive = alive.localCheckpoint(eager=False)
     n_alive = alive.count()
     mis: DataFrame | None = None
 
-    for it in range(1, max_iterations + 1):
+    for _ in range(max_iterations):
         if n_alive == 0:
             break
         nbr = alive.select(F.col("id").alias("dst"), F.col("p").alias("bp"))
@@ -74,7 +68,7 @@ def maximal_independent_set(
         # (the fan-out recompute pitfall: Catalyst re-executes unshared
         # subplans per consumer), leaving the alive-count job pure
         # anti-joins
-        win = win.localCheckpoint(eager=True) if lazy else checkpoint(win, it)
+        win = win.localCheckpoint(eager=True)
         mis = win if mis is None else mis.unionByName(win)
         # retire winners and their whole neighborhoods
         dead_nbrs = sym.join(win, sym["dst"] == win["id"], "left_semi").select("src")
@@ -82,7 +76,7 @@ def maximal_independent_set(
             alive.join(win, "id", "left_anti")
             .join(dead_nbrs, alive["id"] == dead_nbrs["src"], "left_anti")
         )
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, 1000 + it)
+        nxt = nxt.localCheckpoint(eager=False)
         n_alive = nxt.count()  # materializes the round's alive set
         alive = nxt
     else:

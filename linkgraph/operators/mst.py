@@ -40,8 +40,6 @@ lazily checkpointed per round so its union lineage never deepens.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,17 +50,16 @@ from linkgraph.runner import local_checkpoint
 def minimum_spanning_forest(
     graph: Graph,
     max_rounds: int = 40,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     store=None,
 ) -> DataFrame:
     """Returns DataFrame(a: long, b: long, weight: double) — the unique
     minimum spanning forest under the (weight, a, b) total order; V − C
     rows (C = number of connected components). ``store`` commits each
-    round's component map; a relaunch rebuilds the forest from the
-    resumed labels' merge history is NOT stored, so resume restarts the
-    forest — Borůvka's ≤log V rounds make re-running cheap; the store
-    hook exists for lineage-truncation parity with the other kernels."""
-    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
+    round's component map, for lineage truncation and per-round metrics
+    like the other kernels. The forest's merge history is not stored, so
+    a relaunch restarts the forest from round 0 — Borůvka's ≤ log V
+    rounds make re-running cheap."""
+    checkpoint = store.checkpointer if store is not None else local_checkpoint
 
     e = graph.edges.filter(F.col("src") != F.col("dst"))
     canon = (

@@ -102,8 +102,7 @@ def pagerank(
 
     ``info``: optional dict the run fills with ``iterations`` (rounds
     actually executed) and ``delta`` (last blocked L∞ delta, convergence
-    mode) — observability without a custom checkpointer, which would
-    opt the run out of the lazy fast path.
+    mode) — observability without a custom checkpointer.
     """
     checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
     n = graph.num_vertices
@@ -161,9 +160,6 @@ def pagerank(
     # depth, so in-memory blocks stay at most 8 deep
     step = 1 if store is not None else min(max(1, unroll), 8)
     it = start
-    # default path only: durable stores and custom checkpointers keep
-    # their own (eager) materialization semantics
-    lazy_ok = store is None and checkpointer is None
     while it < total_rounds:
         block = min(step, total_rounds - it)
         if tol is None:
@@ -181,14 +177,9 @@ def pagerank(
             for _ in range(block):
                 cur = one_round(cur)
             it += block
-            staged = cur.select("id", "old_rank", "rank")
-            if lazy_ok:
-                # LAZY: the delta aggregate below is the block's single
-                # job — it materializes the checkpoint AND returns the
-                # convergence statistic
-                staged = staged.localCheckpoint(eager=False)
-            else:
-                staged = checkpoint(staged, it)
+            # the delta aggregate is the block's single job on the default
+            # path: it materializes the cut AND returns the statistic
+            staged = checkpoint(cur.select("id", "old_rank", "rank"), it)
             delta = staged.agg(
                 F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("d")
             ).collect()[0]["d"]
@@ -209,7 +200,6 @@ def personalized_pagerank(
     iterations: int = 10,
     damping: float = DAMPING,
     init_mass: float = INIT_RANK,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     unroll: int = 4,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass restricted to ``sources``.
@@ -228,7 +218,6 @@ def personalized_pagerank(
     """
     if not sources:
         raise ValueError("personalized_pagerank: sources must be non-empty")
-    checkpoint = checkpointer or local_checkpoint
     srcs = sorted({int(s) for s in sources})
     b = float(init_mass) / len(srcs)
     norm_edges = graph.out_normalized_edges()
@@ -236,7 +225,7 @@ def personalized_pagerank(
         "id",
         F.when(F.col("id").isin(srcs), F.lit(b)).otherwise(F.lit(0.0)).alias("base"),
     )
-    state = checkpoint(state.withColumn("rank", F.col("base")), 0)
+    state = state.withColumn("rank", F.col("base")).localCheckpoint(eager=False)
 
     def one_round(s: DataFrame) -> DataFrame:
         scattered = norm_edges.join(s, norm_edges["src"] == s["id"]).select(
@@ -260,7 +249,7 @@ def personalized_pagerank(
         for _ in range(block):
             cur = one_round(cur)
         it += block
-        state = checkpoint(cur.select("id", "base", "rank"), it)
+        state = cur.select("id", "base", "rank").localCheckpoint(eager=False)
     return state.select("id", "rank")
 
 
@@ -269,7 +258,6 @@ def weighted_pagerank(
     iterations: int = 10,
     damping: float = DAMPING,
     init_rank: float = INIT_RANK,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """Weight-proportional PageRank: rank flows along each edge in
     proportion to its weight, p(u→v) = w(u,v) / W(u) with W(u) the sum
@@ -291,7 +279,6 @@ def weighted_pagerank(
     edge table is built ONCE (two shuffles: the W(u) aggregate + the
     co-partitioned join) and persisted; per round one edges⋈state join
     + map-side-combined mass aggregate + row-preserving teleport join."""
-    checkpoint = checkpointer or local_checkpoint
     n = graph.num_vertices
     if n == 0:
         raise ValueError("weighted_pagerank: graph has no vertices")
@@ -305,8 +292,8 @@ def weighted_pagerank(
         .localCheckpoint(eager=True)
     )
     ranks = graph.vertices().select("id", F.lit(float(init_rank)).alias("rank"))
-    ranks = checkpoint(ranks, 0)
-    for it in range(1, iterations + 1):
+    ranks = ranks.localCheckpoint(eager=False)
+    for _ in range(iterations):
         mass = (
             norm.join(ranks, norm["src"] == ranks["id"])
             .groupBy("dst")
@@ -319,7 +306,7 @@ def weighted_pagerank(
                 + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
             ).alias("rank"),
         )
-        ranks = checkpoint(ranks, it)
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -327,7 +314,6 @@ def spam_mass(
     graph: Graph,
     trusted: "list[int]",
     iterations: int = 10,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """Relative spam mass (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2006):
     the fraction of a vertex's PageRank NOT attributable to a trusted
@@ -352,10 +338,8 @@ def spam_mass(
     global PR (teleport concentration) ⇒ negative spam_mass; kept, not
     clamped, in both engines.
     """
-    pr = pagerank(graph, iterations=iterations, checkpointer=checkpointer)
-    tr = personalized_pagerank(
-        graph, trusted, iterations=iterations, checkpointer=checkpointer
-    )
+    pr = pagerank(graph, iterations=iterations)
+    tr = personalized_pagerank(graph, trusted, iterations=iterations)
     return (
         pr.select("id", F.col("rank").alias("_pr"))
         .join(tr.select("id", F.col("rank").alias("_tr")), "id")

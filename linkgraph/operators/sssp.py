@@ -23,8 +23,6 @@ reached u — the fixpoint property itself.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,7 +38,6 @@ def sssp(
     broadcast_frontier_max: int = 1_000_000,
     return_parents: bool = False,
     weighted: bool = True,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     store=None,
 ) -> DataFrame:
     """Returns DataFrame(id: long, dist: double[, parent: long]), reached
@@ -60,11 +57,7 @@ def sssp(
     ``store`` commits each round's merged state (which carries old_dist,
     so the improved-rows frontier is reconstructible on relaunch); a store
     holding more rounds than ``max_iterations`` is clamped to the bound."""
-    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
-    # default path: checkpoint LAZILY — the frontier-stats aggregate is
-    # then the single action that materializes the round AND returns the
-    # switch statistic (one job/round, not two)
-    lazy = store is None and checkpointer is None
+    checkpoint = store.checkpointer if store is not None else local_checkpoint
     # edges pre-joined with outdeg(dst): the improved set's degree sum
     # rides the relaxation groupBy — no per-round degrees join
     base = graph.edges_with_dst_out_deg()
@@ -82,10 +75,7 @@ def sssp(
 
     def frontier_stats(f: DataFrame) -> tuple[int, int]:
         """(rows, out-degree sum) in one aggregate — the degree-weighted
-        switch statistic (sssp_pushpull.c:169-180 via buffer.c:272-282).
-        On the lazy-checkpoint path this aggregate is ALSO the action that
-        materializes the round's merged state (the frontier is a filter of
-        it), so the statistic costs no extra job."""
+        switch statistic (sssp_pushpull.c:169-180 via buffer.c:272-282)."""
         row = (
             f.join(deg, "id", "left")
             .agg(
@@ -173,7 +163,7 @@ def sssp(
                 F.col("od"),
             )
         )
-        merged = merged.localCheckpoint(eager=False) if lazy else checkpoint(merged, it)
+        merged = checkpoint(merged, it)
         improved = merged.filter(
             F.col("old_dist").isNull() | (F.col("dist") < F.col("old_dist"))
         )

@@ -17,21 +17,17 @@ canonical edge set — O(E') per round, monotone non-increasing; convergence
 is an exact integer count (no fingerprint). The round count is the truss
 peeling depth — O(1) on sharp community boundaries, O(E) adversarial worst
 case (each round exposes one new under-supported edge), guarded loudly by
-``max_iterations``. Checkpoints are LAZY on the default path so the
-convergence count is the round's single Spark job (the BFS/SSSP
-pattern, same as k_core).
+``max_iterations``. Checkpoints are LAZY so the convergence count is
+the round's single Spark job (the BFS/SSSP pattern, same as k_core).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
 from linkgraph.operators.triangles import _triangle_stream_from_canon
-from linkgraph.runner import local_checkpoint
 
 
 def _edge_support(canon: DataFrame, degree_oriented: bool) -> DataFrame:
@@ -65,7 +61,6 @@ def k_truss(
     k: int = 4,
     max_iterations: int = 200,
     degree_oriented: bool = True,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     incremental: bool = True,
 ) -> DataFrame:
     """Edges of the k-truss of the UNDIRECTED SIMPLE view of ``graph``
@@ -92,14 +87,12 @@ def k_truss(
     """
     if k < 2:
         raise ValueError(f"k must be ≥ 2, got {k}")
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
 
     if not incremental:
-        alive = canon.localCheckpoint(eager=False) if lazy else checkpoint(canon, 0)
+        alive = canon.localCheckpoint(eager=False)
         n_alive = alive.count()
-        for it in range(1, max_iterations + 1):
+        for _ in range(max_iterations):
             if n_alive == 0:
                 break
             supp = _edge_support(alive, degree_oriented)
@@ -108,7 +101,7 @@ def k_truss(
                 .filter(F.coalesce(F.col("sup"), F.lit(0)) >= k - 2)
                 .select("a", "b")
             )
-            nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, it)
+            nxt = nxt.localCheckpoint(eager=False)
             n_next = nxt.count()
             if n_next == n_alive:
                 break
@@ -130,17 +123,13 @@ def k_truss(
     sup = canon.join(supp0, ["a", "b"], "left").select(
         "a", "b", F.coalesce(F.col("sup"), F.lit(0)).cast("long").alias("sup")
     )
-    sup = sup.localCheckpoint(eager=False) if lazy else checkpoint(sup, 0)
+    sup = sup.localCheckpoint(eager=False)
 
-    for it in range(1, max_iterations + 1):
+    for _ in range(max_iterations):
         peeled = sup.filter(F.col("sup") < k - 2).select("a", "b")
         # lazy checkpoint + count: the ONE action of the round — it
         # materializes sup (and peeled) for the three consumers below
-        peeled = (
-            peeled.localCheckpoint(eager=False)
-            if lazy
-            else checkpoint(peeled, it)
-        )
+        peeled = peeled.localCheckpoint(eager=False)
         n_peeled = peeled.count()
         if n_peeled == 0:
             break
@@ -184,7 +173,7 @@ def k_truss(
                 (F.col("sup") - F.coalesce(F.col("d"), F.lit(0))).alias("sup"),
             )
         )
-        sup = nxt.localCheckpoint(eager=False) if lazy else checkpoint(sup, 1000 + it)
+        sup = nxt.localCheckpoint(eager=False)
     else:
         raise RuntimeError(
             f"k_truss(k={k}): peel did not converge in {max_iterations} "
@@ -198,7 +187,6 @@ def trussness(
     graph: Graph,
     max_iterations: int = 100,
     degree_oriented: bool = True,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
 ) -> DataFrame:
     """Full truss DECOMPOSITION: DataFrame(a: long, b: long,
     trussness: long) — every canonical edge's truss number (the largest
@@ -233,8 +221,6 @@ def trussness(
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
-    lazy = checkpointer is None
-    checkpoint = checkpointer or local_checkpoint
     canon = graph.canonical_undirected_edges()
     tri = (
         _triangle_stream_from_canon(canon, degree_oriented)
@@ -255,14 +241,14 @@ def trussness(
         .groupBy("a", "b")
         .agg(F.count("*").alias("rho"))
     )
-    rho = rho.localCheckpoint(eager=False) if lazy else checkpoint(rho, 0)
+    rho = rho.localCheckpoint(eager=False)
 
     w = (
         Window.partitionBy("a", "b")
         .orderBy(F.desc("val"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    for it in range(1, max_iterations + 1):
+    for _ in range(max_iterations):
         sxy = rho.select(
             F.col("a").alias("x"), F.col("b").alias("y"), F.col("rho").alias("rxy")
         )
@@ -307,7 +293,7 @@ def trussness(
             F.col("rho").alias("old"),
             F.least(F.col("rho"), F.col("h")).alias("rho"),
         )
-        merged = merged.localCheckpoint(eager=False) if lazy else checkpoint(merged, it)
+        merged = merged.localCheckpoint(eager=False)
         changed = merged.filter(F.col("rho") != F.col("old")).count()
         rho = merged.select("a", "b", "rho")
         if changed == 0:

@@ -23,8 +23,6 @@ component) so both share one oracle.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,7 +51,6 @@ def _edge_fingerprint(df: DataFrame) -> tuple:
 def wcc(
     graph: Graph,
     max_iterations: int = 200,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     store=None,
     require_convergence: bool = True,
 ) -> DataFrame:
@@ -69,7 +66,7 @@ def wcc(
     holding more rounds than ``max_iterations`` resumes from round
     ``max_iterations``, so the bound is honored across relaunches.
     """
-    checkpoint = store.checkpointer if store is not None else (checkpointer or local_checkpoint)
+    checkpoint = store.checkpointer if store is not None else local_checkpoint
     sym = graph.symmetrized().edges.select("src", "dst")
 
     start, loaded = store.resume(max_iterations) if store is not None else (0, None)
@@ -123,7 +120,6 @@ def wcc(
 def wcc_large_small_star(
     graph: Graph,
     max_iterations: int = 64,
-    checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     require_convergence: bool = True,
 ) -> DataFrame:
     """Large-star/small-star connected components (O(log n) rounds).
@@ -138,15 +134,14 @@ def wcc_large_small_star(
     valid at the fixpoint, so falling through silently would return wrong
     components.
     """
-    checkpoint = checkpointer or local_checkpoint
     # working edge set, symmetrized & deduped; self-loops are irrelevant
     edges = (
         graph.symmetrized()
         .edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
+        .localCheckpoint(eager=False)
     )
-    edges = checkpoint(edges, 0)
     prev_fp = _edge_fingerprint(edges)
 
     for it in range(1, max_iterations + 1):
@@ -190,7 +185,7 @@ def wcc_large_small_star(
         new_edges = new_canon.select(
             F.col("a").alias("src"), F.col("b").alias("dst")
         ).unionByName(new_canon.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        new_edges = checkpoint(new_edges, it)
+        new_edges = new_edges.localCheckpoint(eager=False)
 
         # convergence: order-independent fingerprint of the edge set (one
         # cheap aggregate instead of two exceptAll anti-joins per round —

@@ -5,11 +5,18 @@ destruct in one process; a crash loses everything. Our north rule requires
 every iteration's vertex state to be durably checkpointed with
 per-partition lineage + metrics so a relaunched job resumes mid-algorithm.
 
-Every iterative operator follows one protocol: it commits each round
-through a ``checkpointer(df, iteration)`` function — ``store.checkpointer``
-when a durable ``CheckpointStore`` is given, else the caller's
-checkpointer, else :func:`local_checkpoint` — and a relaunch takes its
-start round and state from ``CheckpointStore.resume(bound)``.
+An iterative operator that takes a ``store`` commits each round through
+``store.checkpointer`` when a durable ``CheckpointStore`` is given, else
+through :func:`local_checkpoint`, and a relaunch takes its start round
+and state from ``CheckpointStore.resume(bound)``. Operators without a
+store cut each round with the same lazy ``localCheckpoint``. The
+in-memory cut truncates the logical plan at once; the round's state is
+materialized by the first action that consumes it — the round's own
+``count``/``isEmpty``/``agg`` convergence test, or else the caller's
+write. ``pagerank``, ``label_propagation``, ``k_core`` and
+``feature_propagation`` also take a ``checkpointer=`` that replaces
+:func:`local_checkpoint`: the seam plan and job-count tests use to
+observe a round.
 
 ``CheckpointStore.checkpointer`` is the durable commit. Each call:
 
@@ -40,9 +47,15 @@ from pyspark.sql import functions as F
 
 
 def local_checkpoint(df: DataFrame, iteration: int) -> DataFrame:
-    """The default in-memory commit: an eager ``localCheckpoint`` truncates
-    the iterative plan's lineage without making the round durable."""
-    return df.localCheckpoint(eager=True)
+    """The in-memory commit: a lazy ``localCheckpoint`` that cuts the
+    iterative plan's lineage without making the round durable and without
+    a job of its own. The cut is materialized by the first action that
+    consumes it — the round's ``count``/``isEmpty``/``agg``, or else the
+    caller's write — so a round costs one job, not a commit job plus a
+    convergence job. With adaptive execution on, making the cut still
+    runs the plan's shuffle stages; only its last stage waits for the
+    consuming action."""
+    return df.localCheckpoint(eager=False)
 
 
 METRICS_SCHEMA = (

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from linkgraph.operators import label_propagation, louvain_move, pagerank, wcc
-from linkgraph.runner import CheckpointStore
+from linkgraph.runner import CheckpointStore, local_checkpoint
 
 from tests.conftest import bridge_edges, chain_edges, make_graph, zipf_edges
 
@@ -180,6 +180,25 @@ def test_resume_clamps_to_requested_rounds(spark, tmp_path, algo):
     assert store.committed_iterations() == committed
     assert store.metrics().count() == lineage_rows
     g.unpersist()
+
+
+def test_local_checkpoint_runs_no_job(spark):
+    """The in-memory commit only cuts the plan: no Spark job runs until
+    an action consumes the cut, and that action sees every input row."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # noqa: SLF001
+    df = spark.range(0, 1000, numPartitions=4).selectExpr("id", "id % 7 AS k")
+    try:
+        sc.setJobGroup("local-cut", "runner.local_checkpoint")
+        cut = local_checkpoint(df, 0)
+        bus.waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("local-cut") == []
+        sc.setJobGroup("local-cut-count", "first consuming action")
+        assert cut.count() == 1000
+        bus.waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("local-cut-count")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_metrics_scoped_and_empty(spark, tmp_path):

@@ -127,13 +127,26 @@ def test_coreness_matches_kcore_thresholds(spark):
     g.unpersist()
 
 
-def test_kcore_one_job_per_round(spark):
-    """The default (in-memory) peel runs ONE Spark job per round: the
-    count() materializes the round's lazily-marked checkpoint AND tests
-    convergence (VERDICT r03 'Next round' #5 — same fix as r03 BFS).
-    The pre-fix shape was 2 jobs/round (eager checkpoint + count)."""
+def _kcore_run(g, checkpointer):
     from linkgraph.operators import k_core
 
+    return k_core(g, k=2, checkpointer=checkpointer)
+
+
+def _labelprop_run(g, checkpointer):
+    from linkgraph.operators import label_propagation
+
+    return label_propagation(g, iterations=6, checkpointer=checkpointer)
+
+
+@pytest.mark.parametrize(
+    "run", [_kcore_run, _labelprop_run], ids=["k_core", "label_propagation"]
+)
+def test_kcore_one_job_per_round(spark, run):
+    """The in-memory commit adds no job of its own: the round's cut is
+    materialized by the action that consumes it (k_core's per-round
+    count, or the caller's count for fixed-round label propagation).
+    An eager commit adds a dedicated materialize job per round on top."""
     edges, n = chain_edges(40)
     g = make_graph(spark, edges, n)
     # measure the round count with a counting (eager) checkpointer
@@ -143,34 +156,35 @@ def test_kcore_one_job_per_round(spark):
         rounds.append(it)
         return df.localCheckpoint(eager=True)
 
-    k_core(g, k=2, checkpointer=counting)
+    run(g, counting).count()
     n_rounds = len(rounds)
-    assert n_rounds >= 5  # a chain peels from both ends — many rounds
+    # a chain peels from both ends — many rounds; labelprop runs its 6
+    assert n_rounds >= 5
 
     sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # noqa: SLF001
     # AQE materializes every shuffle stage as its own job — job counting
     # is only meaningful with it off (the bench kernel loops disable it)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sc.setJobGroup("kcore-eager", "eager checkpoint + count")
-        k_core(g, k=2, checkpointer=lambda df, it: df.localCheckpoint(eager=True))
-        eager_ids = sc.statusTracker().getJobIdsForGroup("kcore-eager")
-        sc.setJobGroup("kcore-lazy", "one action per peel round")
-        k_core(g, k=2)
-        lazy_ids = sc.statusTracker().getJobIdsForGroup("kcore-lazy")
+        # group names are per case: a group keeps its jobs for the session
+        eager, default = f"eager{run.__name__}", f"default{run.__name__}"
+        sc.setJobGroup(eager, "eager commit per round + consumer")
+        run(g, counting).count()
+        sc.setJobGroup(default, "default commit + consumer")
+        run(g, None).count()
+        bus.waitUntilEmpty()
+        eager_ids = sc.statusTracker().getJobIdsForGroup(eager)
+        default_ids = sc.statusTracker().getJobIdsForGroup(default)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    # the lazy default path has ONE action per round (its count both
-    # materializes the checkpoint and tests convergence); the remaining
-    # per-round sub-job is the semi-join's broadcast exchange, which is
-    # part of that single action. The eager shape adds a dedicated
-    # materialize job per round on top — strictly more jobs.
-    assert len(lazy_ids) <= len(eager_ids) - n_rounds + 2, (
-        len(lazy_ids), len(eager_ids), n_rounds,
+    assert len(default_ids) <= len(eager_ids) - n_rounds, (
+        len(default_ids), len(eager_ids), n_rounds,
     )
-    assert len(lazy_ids) <= 2 * n_rounds + 4, (len(lazy_ids), n_rounds)
+    # at most one action per round plus its broadcast-exchange sub-job
+    assert len(default_ids) <= 2 * n_rounds + 4, (len(default_ids), n_rounds)
     g.unpersist()
 
 
